@@ -1,18 +1,18 @@
-"""Benchmark harness.
-
-Prints ONE JSON line:
-  {"metric": ..., "value": <total headline sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "images_tiled_per_sec@local[8]": ..., "images_tiled_per_sec@local[32]": ...,
-   "scaling_efficiency_8_to_32": ...}
+"""Benchmark harness, and the one home of the measurement pieces that
+tools/ab_query.py and tools/scaling_hunt.py reuse (session conf, probe,
+quiet-host gate, image table, pinned scaling pairs).
 
 Two parts:
-1. headline queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR
-   (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+1. headline queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR on
+   local[$SPARK_GRAFT_CPUS]: per-query MIN over interleaved reps.
 2. the north-star metric (BASELINE.json): images-tiled/sec for the
-   generate→S2-assign→PIP-join→salted-agg pipeline, measured at local[8]
-   and local[32] on the SAME pre-generated parquet input; scaling
-   efficiency = (thr32/thr8)/4 (in-sandbox stand-in for N vs 4N executors).
+   verify→S2-assign→PIP-join→salted-agg pipeline on the SAME pre-generated
+   parquet input at two pinned core counts (default local[2] vs local[8],
+   $SPARK_GRAFT_SCALE_PAIR); scaling efficiency = (thr_hi/thr_lo)/(hi/lo),
+   an in-sandbox stand-in for N vs 4N executors.
+
+The full record goes to BENCH/bench_latest.json; stdout's last line is a
+compact JSON summary of at most 1,500 bytes.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -27,6 +28,27 @@ import time
 import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from geojson_spark.session import get_spark  # noqa: E402
+
+LATEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_latest.json")
+
+# Every bench session: engine defaults (get_spark) plus finer scan
+# granularity — the 300k-image table otherwise packs into ~5
+# read-partitions at local[2] (waves of 2/2/1 strand a core); ~16 MB
+# splits give every level full waves + load balancing.
+BENCH_CONF = {
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+}
+
+# Quiet-host gate: a window is quiet when the single-core probe is within
+# 1.5x of its healthy time (0.17 s on the 32-vCPU reference host) AND the
+# host's own pure-NumPy lo→hi ceiling is at least 0.85.
+HEALTHY_PROBE_S = 0.17
+QUIET_FACTOR = 1.5
+GATE_CEILING = 0.85
+CEILING_TASKS = 16  # _calib_task units per host_ceiling level
 
 HEADLINE = [
     "cell_counts",
@@ -72,81 +94,62 @@ HEADLINE = [
 ]
 
 
-def _new_session(cpus: int, tag: str):
-    from pyspark.sql import SparkSession
-
-    from geojson_spark.session import attach_package
-
-    s = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"bench-{tag}")
-        .config("spark.sql.shuffle.partitions", str(max(8, cpus)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # finer scan granularity: the 300k-image table otherwise packs into
-        # ~5 read-partitions at local[2] (waves of 2/2/1 strand a core);
-        # ~16 MB splits give every level full waves + load balancing
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    attach_package(s)
-    return s
+def probe_s() -> float:
+    """The host-weather probe: seconds for one single-core ``_calib_task``."""
+    t0 = time.time()
+    _calib_task(0)
+    return round(time.time() - t0, 3)
 
 
-def run_headline(sf_dir: str, cpus: int) -> dict[str, float]:
-    """Per-query seconds = MIN over interleaved full-list reps.
-
-    One rep per query let a single throttle spike on this shared host
-    become the permanent record (round 3: a 2.6× mid-run throttle turned
-    48.6 s into 132.9 s). Reps are interleaved — the whole list runs,
-    then runs again — so one bad weather window cannot hit the same
-    query twice; the min is the closest observable to the engine's own
-    cost. Single-core NumPy probes bracket every rep boundary so the
-    record carries its own weather normalizer."""
+def time_queries(spark, sf_dir: str, names: list[str], reps: int):
+    """Run ``names`` ``reps`` times, interleaved (the whole list, then again),
+    timing each query's noop-sink write. Returns the per-rep walls
+    (``[{name: s}, ...]``) and the ``reps + 1`` probes taken at every rep
+    boundary, so the record carries its own weather normalizer."""
     import __spark_entry__ as E
 
-    spark = _new_session(cpus, "headline")
-    _warm_python_workers(spark, cpus)  # long-running executors are warm
     qs = E.queries()
-    reps = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
-    times: dict[str, float] = {}
-    probes: list[float] = []
-    rep_totals: list[float] = []
-
-    def probe():
-        t0 = time.time()
-        _calib_task(0)
-        probes.append(round(time.time() - t0, 3))
-
-    probe()
+    walls: list[dict[str, float]] = []
+    probes = [probe_s()]
     for rep in range(reps):
-        rep_t0 = time.time()
-        for name in HEADLINE:
+        w: dict[str, float] = {}
+        for name in names:
             t0 = time.time()
-            df = qs[name](spark, sf_dir)
             # noop sink, NOT count(): count() prunes every column, so a
             # projection-shaped query (doc_fingerprint, token_stats,
             # repetition_stats) would never execute its UDF/regexp work
             # and record ~0s — the exact CLAUDE.md profiling trap. The
             # noop write materializes every output column JVM-side.
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            times[name] = min(times.get(name, dt), dt)
-            print(f"  [rep {rep}] {name}: {dt}s", file=sys.stderr)
-        rep_totals.append(round(time.time() - rep_t0, 3))
-        probe()
-    times["host_probe_before_sec"] = probes[0]
-    times["host_probe_after_sec"] = probes[-1]
-    times["host_probe_per_rep"] = probes
-    times["headline_rep_totals"] = rep_totals
-    times["headline_reps"] = reps
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            w[name] = round(time.time() - t0, 3)
+            print(f"  [rep {rep}] {name}: {w[name]}s", file=sys.stderr)
+        walls.append(w)
+        probes.append(probe_s())
+    return walls, probes
+
+
+def run_headline(sf_dir: str, cpus: int) -> tuple[dict[str, float], dict]:
+    """Per-query seconds = MIN over interleaved full-list reps, plus the
+    probes and rep totals that qualify them.
+
+    One rep per query let a single throttle spike on this shared host
+    become the permanent record (round 3: a 2.6× mid-run throttle turned
+    48.6 s into 132.9 s). Interleaved reps mean one bad weather window
+    cannot hit the same query twice; the min is the closest observable to
+    the engine's own cost."""
+    spark = get_spark(master=f"local[{cpus}]", app_name="bench-headline",
+                      shuffle_partitions=max(8, cpus), extra_conf=BENCH_CONF)
+    _warm_python_workers(spark, cpus)  # long-running executors are warm
+    reps = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
+    walls, probes = time_queries(spark, sf_dir, HEADLINE, reps)
     spark.stop()
-    return times
+    return {n: min(w[n] for w in walls) for n in HEADLINE}, {
+        "host_probe_before_sec": probes[0],
+        "host_probe_after_sec": probes[-1],
+        "host_probe_per_rep": probes,
+        "headline_rep_totals": [round(sum(w.values()), 3) for w in walls],
+        "headline_reps": reps,
+    }
 
 
 def tiling_job(spark, images_path: str, ckpt_dir: str | None = None) -> int:
@@ -244,7 +247,7 @@ def _calib_task(_i):
     return float(x[0])
 
 
-def host_ceiling(p_lo: int, p_hi: int, n_tasks: int = 32) -> dict[str, float]:
+def host_ceiling(p_lo: int, p_hi: int) -> dict[str, float]:
     """Measure what THIS HOST currently permits for the same core pair:
     fixed pure-NumPy task set at p_lo and p_hi pinned processes. A shared
     host is sometimes throttled below 0.8 parallel efficiency all by
@@ -259,7 +262,7 @@ def host_ceiling(p_lo: int, p_hi: int, n_tasks: int = 32) -> dict[str, float]:
             os.sched_setaffinity(0, set(all_cpus[:p]))
             t0 = time.time()
             with mp.get_context("fork").Pool(p) as pool:
-                pool.map(_calib_task, range(n_tasks))
+                pool.map(_calib_task, range(CEILING_TASKS))
             out[p] = time.time() - t0
     finally:
         os.sched_setaffinity(0, set(all_cpus))
@@ -271,201 +274,217 @@ def host_ceiling(p_lo: int, p_hi: int, n_tasks: int = 32) -> dict[str, float]:
     }
 
 
-def _scale_measurement(p: int, images_path: str, ckpt_dir: str, n_images: int) -> dict:
-    """One pinned tiling measurement in a fresh subprocess (fresh JVM).
+def _wait_for_quiet_host(max_wait_s: float, ceiling_pair: tuple[int, int] | None = None) -> dict:
+    """Gate a timing phase on host health: poll the single-core probe until
+    it lands within ``QUIET_FACTOR`` × ``HEALTHY_PROBE_S`` or the wait
+    budget runs out. Four rounds of recorded benches all landed in throttle
+    windows and published raw scaling numbers the host itself could not
+    have met — cheaper to wait for weather than to normalize it away after
+    the fact. On timeout the outcome says ``met=False``; the caller decides
+    whether to measure anyway.
 
-    The child is restricted to CPUs [0, p) before exec; the JVM and its
-    Python workers inherit that affinity, so local[p] really means p cores.
-    Session boot + worker warmup happen inside the child BEFORE timing.
-    """
-    import json as _json
-    import subprocess
-    import sys as _sys
+    ``ceiling_pair=(p_lo, p_hi)`` additionally requires the HOST itself to
+    scale p_lo→p_hi at ≥ ``GATE_CEILING`` right now — a quiet single core
+    does not imply multi-core headroom on this hypervisor (the r5 first
+    attempt: probe 0.2 s but host ceiling 0.43, so no engine number could
+    have reached 0.8)."""
+    t0 = time.time()
+    waited = 0.0
+    while True:
+        probe = probe_s()
+        quiet = probe <= HEALTHY_PROBE_S * QUIET_FACTOR
+        ceiling = None
+        if quiet and ceiling_pair is not None:
+            ceiling = host_ceiling(*ceiling_pair)["host_ceiling_efficiency"]
+        met = quiet and (ceiling is None or ceiling >= GATE_CEILING)
+        if not met:
+            waited = time.time() - t0
+        if met or waited >= max_wait_s:
+            return {"probe": probe, "ceiling": ceiling, "waited_s": round(waited, 1), "met": met}
+        time.sleep(min(15.0, max(1.0, max_wait_s - waited)))
 
+
+def generate_image_table(n_images: int, images_path: str) -> float:
+    """Write the skewed image+caption table once (local[$SPARK_GRAFT_CPUS]);
+    every pinned measurement reads this same parquet. Returns seconds."""
+    from geojson_spark.sources.images import generate_images
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(master=f"local[{cpus}]", app_name="bench-gen",
+                      shuffle_partitions=max(8, cpus), extra_conf=BENCH_CONF)
+    t0 = time.time()
+    generate_images(spark, n_images, skew=True, partitions=cpus).write.mode(
+        "overwrite"
+    ).parquet(images_path)
+    dt = time.time() - t0
+    spark.stop()
+    return round(dt, 2)
+
+
+def _pinned_pair(images_path: str, order: tuple[int, int]) -> dict[int, dict]:
+    """One tiling measurement per core count in ``order``, each in a fresh
+    subprocess (fresh JVM) restricted to CPUs [0, p) before exec.
+
+    Unpinned local[N] is NOT an N-core cluster — the JVM's GC / shuffle /
+    Arrow threads soak extra cores, flattering the small level. The JVM
+    and its Python workers inherit the affinity, so local[p] really means
+    p cores. Session boot + worker warmup happen inside the child BEFORE
+    timing."""
     all_cpus = sorted(os.sched_getaffinity(0))
-    cpus = set(all_cpus[:p])
-    res = subprocess.run(
-        [_sys.executable, os.path.abspath(__file__), "--scale-worker",
-         str(p), images_path, ckpt_dir, str(n_images)],
-        preexec_fn=lambda: os.sched_setaffinity(0, cpus),
-        capture_output=True,
-        text=True,
-        timeout=3600,
-    )
-    if res.returncode != 0:
-        raise RuntimeError(f"scale worker failed: {res.stderr[-2000:]}")
-    return _json.loads(res.stdout.strip().splitlines()[-1])
+    out = {}
+    for p in order:
+        cpus = set(all_cpus[:p])
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(images_path)) as ckpt_dir:
+            res = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--scale-worker",
+                 str(p), images_path, ckpt_dir],
+                preexec_fn=lambda: os.sched_setaffinity(0, cpus),
+                capture_output=True,
+                text=True,
+                timeout=3600,
+            )
+        if res.returncode != 0:
+            raise RuntimeError(f"scale worker failed: {res.stderr[-2000:]}")
+        out[p] = json.loads(res.stdout.strip().splitlines()[-1])
+    return out
 
 
-def _scale_worker_main(p: int, images_path: str, ckpt_dir: str, n_images: int) -> None:
-    import json as _json
-
-    spark = _new_session(p, f"tile{p}")
+def _scale_worker_main(p: int, images_path: str, ckpt_dir: str) -> None:
+    spark = get_spark(master=f"local[{p}]", app_name=f"bench-tile{p}",
+                      shuffle_partitions=max(8, p), extra_conf=BENCH_CONF)
     _warm_python_workers(spark, p)
     t0 = time.time()
     tiling_job(spark, images_path, ckpt_dir=ckpt_dir)
     wall = time.time() - t0
+    n_images = spark.read.parquet(images_path).count()
     lineage = spark.read.parquet(os.path.join(ckpt_dir, "lineage_s2_assign"))
     n_parts = lineage.count()
     assert lineage.agg({"rows": "sum"}).collect()[0][0] == n_images
     spark.stop()
-    print(_json.dumps({"wall": wall, "lineage_partitions": n_parts}))
+    print(json.dumps({"wall": wall, "lineage_partitions": n_parts, "n_images": n_images}))
 
 
-def _wait_for_quiet_host(max_wait_s: float, ceiling_pair: tuple[int, int] | None = None) -> dict:
-    """Gate a timing phase on host health: poll the single-core NumPy probe
-    until it lands within ~1.5× of the healthy baseline (~0.17 s on this
-    host) or the wait budget runs out. Four rounds of driver benches all
-    landed in throttle windows and published raw scaling numbers the host
-    itself could not have met — cheaper to wait for weather than to
-    normalize it away after the fact. The gate never blocks the bench
-    forever: on timeout the measurement proceeds and the record says so.
+def scaling_reps(
+    images_path: str,
+    p_lo: int,
+    p_hi: int,
+    budget_s: float,
+    max_reps: int,
+    stop_at: float | None,
+) -> list[dict]:
+    """Pinned p_lo/p_hi tiling pairs, each started only in a quiet-host
+    window, until ``max_reps`` pairs, the wall budget, or a gated pair with
+    raw efficiency ≥ ``stop_at`` (when given). Returns one record per pair.
 
-    ``ceiling_pair=(p_lo, p_hi)`` additionally requires the HOST itself to
-    scale p_lo→p_hi at ≥ the gate efficiency (default 0.85) right now —
-    a quiet single core does not imply multi-core headroom on this
-    hypervisor (the r5 first attempt: probe 0.2 s but host ceiling 0.43,
-    so no engine number could have reached 0.8)."""
-    healthy = float(os.environ.get("SPARK_GRAFT_HEALTHY_PROBE_S", "0.17"))
-    factor = float(os.environ.get("SPARK_GRAFT_QUIET_FACTOR", "1.5"))
-    min_ceiling = float(os.environ.get("SPARK_GRAFT_GATE_CEILING", "0.85"))
+    Throughput swings ~2x over minutes on this shared host, so both levels
+    of a pair run back-to-back in one gated window (callers compare PAIRS,
+    never min-of-each across windows), the level order alternates per pair
+    so a monotonic drift cannot bias every pair the same way, and a
+    host-ceiling probe follows each pair so it carries its own window's
+    ceiling. If the budget ends with no gated pair, exactly one ungated
+    pair runs with ``gate.met=False`` — the bench always gets a number."""
+
+    def pair(gate: dict, order: tuple[int, int]) -> dict:
+        runs = _pinned_pair(images_path, order)
+        rec = {"order": list(order), "gate": gate}
+        for p in order:
+            wall = runs[p]["wall"]
+            rec[f"tiling_sec@local[{p}]"] = round(wall, 2)
+            rec[f"images_tiled_per_sec@local[{p}]"] = round(runs[p]["n_images"] / wall, 1)
+            rec[f"lineage_partitions@local[{p}]"] = runs[p]["lineage_partitions"]
+        rec["raw_efficiency"] = round(
+            (runs[p_lo]["wall"] / runs[p_hi]["wall"]) / (p_hi / p_lo), 3
+        )
+        rec.update(host_ceiling(p_lo, p_hi))
+        print(f"[scaling] {rec}", file=sys.stderr)
+        return rec
+
     t0 = time.time()
-    waited = 0.0
-    while True:
-        p0 = time.time()
-        _calib_task(0)
-        probe = time.time() - p0
-        ceiling = None
-        if probe <= healthy * factor:
-            if ceiling_pair is None:
-                return {"probe": round(probe, 3), "waited_s": round(waited, 1), "met": True}
-            ceiling = host_ceiling(*ceiling_pair, n_tasks=16)["host_ceiling_efficiency"]
-            if ceiling >= min_ceiling:
-                return {"probe": round(probe, 3), "ceiling": ceiling,
-                        "waited_s": round(waited, 1), "met": True}
-        waited = time.time() - t0
-        if waited >= max_wait_s:
-            return {"probe": round(probe, 3), "ceiling": ceiling,
-                    "waited_s": round(waited, 1), "met": False}
-        time.sleep(min(15.0, max(1.0, max_wait_s - waited)))
+    reps: list[dict] = []
+    while len(reps) < max_reps:
+        left = budget_s - (time.time() - t0)
+        if reps and left <= 0:
+            break
+        gate = _wait_for_quiet_host(max(0.0, left), ceiling_pair=(p_lo, p_hi))
+        if not gate["met"]:
+            break
+        reps.append(pair(gate, (p_hi, p_lo) if len(reps) % 2 else (p_lo, p_hi)))
+        if stop_at is not None and reps[-1]["raw_efficiency"] >= stop_at:
+            break
+    if not reps:
+        reps.append(pair(gate, (p_lo, p_hi)))
+    return reps
 
 
-def run_scaling(n_images: int) -> dict[str, float]:
+def run_scaling(n_images: int, p_lo: int, p_hi: int) -> dict:
     """North-rule scaling evidence: the same tiling job at N and 4N cores.
 
-    Default pair is (2, 8): raw-multiprocessing calibration shows this
-    sandbox exposes 32 vCPUs but sustains only ~10-12 cores of parallel
-    NumPy throughput (8→32 procs gives 1.5×, not 4× — hypervisor
-    throttling), so 2→8 is the largest honest 4× the hardware supports.
-    Override with SPARK_GRAFT_SCALE_PAIR=8,32 to measure the saturated pair.
+    Default pair is (2, 8): raw-multiprocessing calibration shows the
+    32-vCPU host sustains only ~10-12 cores of parallel NumPy throughput
+    (8→32 procs gives 1.5×, not 4× — hypervisor throttling), so 2→8 is the
+    largest honest 4× the hardware supports. Override with
+    SPARK_GRAFT_SCALE_PAIR=8,32 to measure the saturated pair.
     """
-    from geojson_spark.sources.images import generate_images
-
-    pair = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8")
-    p_lo, p_hi = (int(v) for v in pair.split(","))
-
     tmp = tempfile.mkdtemp(prefix="bench_images_")
     images_path = os.path.join(tmp, "images")
-    out: dict[str, float] = {}
     try:
-        gen_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark = _new_session(gen_cpus, "gen")
-        t0 = time.time()
-        generate_images(spark, n_images, skew=True, partitions=gen_cpus).write.mode(
-            "overwrite"
-        ).parquet(images_path)
-        out["generate_sec"] = round(time.time() - t0, 2)
-        spark.stop()
-
-        # Two measurement hazards on this host, both handled explicitly:
-        # 1. Unpinned local[N] is NOT an N-core cluster — the JVM's GC /
-        #    shuffle / Arrow threads soak extra cores, flattering the small
-        #    level and deflating efficiency. Each measurement runs in a
-        #    SUBPROCESS pinned (sched_setaffinity before exec, inherited by
-        #    its fresh JVM and Python workers) to exactly N CPUs, making
-        #    the "N vs 4N executors" emulation exact.
-        # 2. Absolute throughput swings ~2x over minutes (shared tenancy):
-        #    interleave FULL PAIRS of both levels, keep going until the wall
-        #    budget is spent (so one throttled window can't define the
-        #    record), and take the best PAIRED rep — both levels of one rep
-        #    run back-to-back in the same weather window, where min-of-each
-        #    across reps could pair a throttled window with a healthy one.
-        #    The level order alternates per rep ((lo,hi),(hi,lo),…) so a
-        #    monotonic host drift can't bias every rep the same way, and a
-        #    pure-NumPy host-ceiling probe runs adjacent to each rep so the
-        #    chosen rep carries its own window's ceiling.
-        max_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6"))
-        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "560"))
-        walls: list[dict[int, float]] = []
-        lineages: list[dict[int, int]] = []
-        probes: list[dict[str, float]] = []
-        gates: list[dict] = []
-        t_scale0 = time.time()
-        for rep in range(max_reps):
-            # rep 1 always runs; later reps only start within the budget so a
-            # slow host can't push the whole bench past a harness timeout
-            if rep > 0 and time.time() - t_scale0 > budget_s:
-                break
-            # quiet-host gate: don't START a paired measurement inside a
-            # throttle window — wait (bounded by the remaining budget, and
-            # by half the budget before the mandatory first rep) for the
-            # probe to return to ~healthy. A gate timeout still measures.
-            gate_budget = (
-                budget_s / 2 if rep == 0
-                else max(0.0, budget_s - (time.time() - t_scale0))
-            )
-            gates.append(_wait_for_quiet_host(gate_budget, ceiling_pair=(p_lo, p_hi)))
-            order = (p_lo, p_hi) if rep % 2 == 0 else (p_hi, p_lo)
-            w: dict[int, float] = {}
-            lin: dict[int, int] = {}
-            for p in order:
-                ckpt_dir = os.path.join(tmp, f"ckpt{p}_{rep}")
-                r = _scale_measurement(p, images_path, ckpt_dir, n_images)
-                w[p] = r["wall"]
-                lin[p] = r["lineage_partitions"]
-            walls.append(w)
-            lineages.append(lin)
-            probes.append(host_ceiling(p_lo, p_hi))
-        ceilings = [p["host_ceiling_efficiency"] for p in probes]
-        ratio = p_hi / p_lo
-        per_rep = [round((w[p_lo] / w[p_hi]) / ratio, 3) for w in walls]
-        # engine-vs-host per rep: each rep's efficiency normalized by ITS
-        # OWN adjacent ceiling probe, so a throttle window that caps both
-        # numbers cancels out instead of defining the record
-        vs_host = [round(e / c, 3) if c else None for e, c in zip(per_rep, ceilings)]
-        out["engine_vs_host_per_rep"] = vs_host
-        best_i = per_rep.index(max(per_rep))
-        for p, wall in walls[best_i].items():
-            out[f"images_tiled_per_sec@local[{p}]"] = round(n_images / wall, 1)
-            out[f"tiling_sec@local[{p}]"] = round(wall, 2)
-            # lineage from the SAME rep as the headline throughput (the
-            # old per-rep overwrite reported the LAST rep's value, mixing
-            # reps in one record)
-            out[f"lineage_partitions@local[{p}]"] = lineages[best_i][p]
-        out["scaling_reps"] = len(walls)
-        out["scaling_efficiency_per_rep"] = per_rep
-        out["host_ceiling_per_rep"] = ceilings
-        out["quiet_gate_per_rep"] = gates
-        out["cpu_pinned"] = True
-        # headline ceiling = the probe adjacent to the chosen rep (same
-        # weather window); the full per-rep list is reported above
-        out.update(probes[best_i])
-        thr_lo = out[f"images_tiled_per_sec@local[{p_lo}]"]
-        thr_hi = out[f"images_tiled_per_sec@local[{p_hi}]"]
-        eff = round((thr_hi / thr_lo) / (p_hi / p_lo), 3)
-        out[f"scaling_efficiency_{p_lo}_to_{p_hi}"] = eff
-        ceiling = out.get("host_ceiling_efficiency")
-        if ceiling:
-            out["efficiency_vs_host_ceiling"] = round(eff / ceiling, 3)
+        generate_sec = generate_image_table(n_images, images_path)
+        reps = scaling_reps(
+            images_path, p_lo, p_hi,
+            budget_s=float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "560")),
+            max_reps=int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6")),
+            stop_at=None,
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    best = max(reps, key=lambda r: r["raw_efficiency"])
+    eff, ceiling = best["raw_efficiency"], best["host_ceiling_efficiency"]
+    return {
+        "generate_sec": generate_sec,
+        # each rep's efficiency normalized by ITS OWN adjacent ceiling
+        # probe, so a throttle window that caps both numbers cancels out
+        "engine_vs_host_per_rep": [
+            round(r["raw_efficiency"] / r["host_ceiling_efficiency"], 3) for r in reps
+        ],
+        # the chosen pair's walls, throughputs, lineage and adjacent
+        # ceiling probe — all from the same weather window
+        **{k: v for k, v in best.items() if "@" in k},
+        "host_ceiling_efficiency": ceiling,
+        "scaling_reps": len(reps),
+        "scaling_efficiency_per_rep": [r["raw_efficiency"] for r in reps],
+        "host_ceiling_per_rep": [r["host_ceiling_efficiency"] for r in reps],
+        "quiet_gate_per_rep": [r["gate"] for r in reps],
+        "scaling_gate_met": best["gate"]["met"],
+        "cpu_pinned": True,
+        f"scaling_efficiency_{p_lo}_to_{p_hi}": eff,
+        "efficiency_vs_host_ceiling": round(eff / ceiling, 3),
+    }
+
+
+_COMPACT_KEYS = ("metric", "value", "unit", "sf", "n_images", "efficiency_vs_host_ceiling",
+                 "scaling_reps", "scaling_gate_met")
+
+
+def compact_line(record: dict) -> str:
+    """The stdout summary of a full bench record: headline totals, per-query
+    seconds at 2 decimals and the scaling headline, without the per-rep
+    lists. Stays under 1,500 bytes for the 40-query headline, so a reader
+    that keeps only the last 2,000 characters of output can parse it."""
+    line = {
+        k: v for k, v in record.items()
+        if k in _COMPACT_KEYS
+        or (k.startswith(("scaling_efficiency_", "images_tiled_per_sec@"))
+            and not k.endswith("_per_rep"))
+    }
+    line["queries"] = {n: round(s, 2) for n, s in record["queries"].items()}
+    return json.dumps(line, separators=(",", ":"))
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "300000"))
+    p_lo, p_hi = (int(v) for v in os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8").split(","))
     try:
         sf = float(sf_dir.rstrip("/").split("sf")[-1])
     except ValueError:
@@ -473,32 +492,27 @@ def main():
         # multi-minute run completed — report the raw path instead
         sf = sf_dir
 
-    times = run_headline(sf_dir, cpus)
-    probes = {
-        k: times.pop(k)
-        for k in list(times)
-        if k.startswith(("host_probe_", "headline_"))
-    }
-    scaling = run_scaling(n_images) if n_images > 0 else {}
-
-    result = {
-        "metric": "headline queries + images-tiled/sec (S2 assign + PIP join), "
-        "scaling local[8] vs local[32]",
-        "value": round(sum(times.values()), 3),
+    queries, probes = run_headline(sf_dir, cpus)
+    scaling = run_scaling(n_images, p_lo, p_hi) if n_images > 0 else {}
+    record = {
+        "metric": "headline queries (min over interleaved reps) + images-tiled/sec "
+        f"(S2 assign + PIP join), pinned scaling local[{p_lo}] vs local[{p_hi}]",
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
-        "queries": times,
+        "queries": queries,
         **probes,
         "sf": sf,
         "n_images": n_images,
         **scaling,
     }
-    print(json.dumps(result))
+    os.makedirs(os.path.dirname(LATEST), exist_ok=True)
+    with open(LATEST, "w", encoding="utf-8") as fh:
+        json.dump(record, fh, indent=1)
+    print(compact_line(record))
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--scale-worker":
-        _scale_worker_main(
-            int(sys.argv[2]), sys.argv[3], sys.argv[4], int(sys.argv[5])
-        )
+        _scale_worker_main(int(sys.argv[2]), sys.argv[3], sys.argv[4])
     else:
         main()

@@ -350,11 +350,6 @@ def positions(geometry: Column) -> Column:
     return _positions_slice(c, F.lit(0).cast("long"), n, d)
 
 
-def point_coords(geometry: Column) -> Column:
-    """C7: Point → position array<double> (to_geo_types.rs:10-21)."""
-    return geometry["coords"]
-
-
 def multi_point_positions(geometry: Column) -> Column:
     """C7: MultiPoint → array of positions (to_geo_types.rs:25-44)."""
     return positions(geometry)

@@ -162,10 +162,3 @@ def st_simplify(geometry: Column, tolerance: float) -> Column:
         return pd.DataFrame(rows, columns=names)
 
     return _simp(geometry)
-
-
-def st_length(geometry: Column) -> Column:
-    """Polyline length of the first part — identical fold to
-    :func:`st_perimeter` (for an OPEN LineString the edge walk simply has
-    no closing edge, so the same expression is the path length)."""
-    return st_perimeter(geometry)

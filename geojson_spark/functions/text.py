@@ -136,15 +136,6 @@ def simhash64(text: str) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    x = (a.astype(np.int64) ^ b.astype(np.int64)).astype(np.uint64)
-    cnt = np.zeros(x.shape, dtype=np.int64)
-    for _ in range(64):
-        cnt += (x & np.uint64(1)).astype(np.int64)
-        x >>= np.uint64(1)
-    return cnt
-
-
 def jaccard(a: set, b: set) -> float:
     if not a and not b:
         return 1.0

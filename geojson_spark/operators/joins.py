@@ -297,20 +297,28 @@ def pip_join(
             # deterministic hash sample capped at ~2048 EXPECTED rows —
             # an absolute bound on cover-UDF evaluations, not a fraction
             # that grows with the table. n is known here, so the modulus
-            # adapts; sides under 2048 rows are measured exactly.
+            # adapts; sides under 4096 rows (mod 1) are measured exactly.
             bytes_expr = F.size(cover_expr) * (
                 F.size(F.col("coords")) * F.lit(8.0) + F.lit(64.0)
             )
-            mod = max(1, n_polys // 2048)
-            sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
             # E[cover·bytes], NOT E[cover]·E[bytes]: cover size and coords
             # length are positively correlated (big polygons have both),
             # so the product of means can undershoot by an order of
             # magnitude on a mostly-tiny + few-coastlines mix
-            probe = polygons.where(sampled).select(
+            stats = [
+                F.count(F.lit(1)).alias("n"),
                 F.avg(F.size(cover_expr)).alias("m"),
                 F.avg(bytes_expr).alias("pb"),
-            ).first()
+            ]
+            mod = max(1, n_polys // 2048)
+            sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
+            probe = polygons.where(sampled).select(*stats).first()
+            if mod > 1 and probe["n"] < 32:
+                # ids that hash unevenly can leave the sample (near-)empty;
+                # its means would then approve any broadcast. The expected
+                # sample is >= 2048 rows, so only skewed ids pay for this
+                # exact pass over the whole side
+                probe = polygons.select(*stats).first()
             mean_cover, mean_bytes = probe["m"], probe["pb"]
             est_rows = n_polys * (mean_cover or 1.0)
             # per exploded row: coords doubles (8 B each) + offsets/key/id

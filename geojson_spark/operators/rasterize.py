@@ -220,15 +220,21 @@ def tile_pixels(tiles: DataFrame) -> DataFrame:
                 bufs = [bytes(b) for b in grp["bytes"]]
                 n = len(bufs)
                 if fmt in ("raw", "q8"):
-                    flat = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+                    parts = [np.frombuffer(b, dtype=np.uint8) for b in bufs]
                 elif fmt == "rle":
-                    flat = np.concatenate([rle_decode(b) for b in bufs])
+                    parts = [rle_decode(b) for b in bufs]
                 else:
                     raise ValueError(f"unknown fmt {fmt!r}")
-                if flat.size != n * w * h * 3:
+                # per tile, not per stack: a short tile next to a long one
+                # would otherwise pass a total-size check and shift every
+                # later pixel into the wrong tile
+                sizes = {len(p) for p in parts}
+                if sizes != {w * h * 3}:
                     raise ValueError(
-                        f"decoded {flat.size} bytes, expected {n * w * h * 3}"
+                        f"{fmt} tiles decoded to {sorted(sizes)} bytes, "
+                        f"expected {w * h * 3} each"
                     )
+                flat = np.concatenate(parts)
                 imgs = flat.reshape(n, h, w, 3)[:, :, :, 0]
                 ti, py, px = np.nonzero(imgs)
                 if len(px):

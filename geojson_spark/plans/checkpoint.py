@@ -217,9 +217,9 @@ def resumable_apply(
     ``fail_after`` kills the job after N buckets (for kill→resume tests).
     Returns the full output (previously checkpointed ∪ newly computed):
     when a concurrent resume holds claims on some buckets, this process
-    waits up to ``sibling_wait_s`` for those commits (reclaiming any whose
-    owner died) and raises if buckets remain unfinished — it never returns
-    a partial result.
+    waits for those commits (reclaiming any whose owner died) and raises
+    if ``sibling_wait_s`` passes with no bucket finishing — it never
+    returns a partial result.
     """
     m = ckpt.read_manifest()
     if m["buckets"]:
@@ -300,11 +300,12 @@ def resumable_apply(
         # by a LIVE sibling resume are still in flight — the 'Returns the
         # full output' contract means we must wait for their commits (or
         # reclaim them when the sibling dies), never silently return a
-        # DataFrame missing their rows. The wait budget starts when WAITING
-        # starts (first pass that makes no progress), not at loop entry —
-        # otherwise a resume that spent sibling_wait_s on its own buckets
-        # would time out the moment it finished working.
+        # DataFrame missing their rows. The wait budget restarts whenever
+        # a pass sees fewer unfinished buckets than the last one (our own
+        # commits or a sibling's), so it bounds a stall, not the total
+        # time a steadily committing sibling needs.
         deadline: float | None = None
+        last_remaining = n_buckets + 1
         while True:
             remaining = [
                 b for b in range(n_buckets)
@@ -312,6 +313,9 @@ def resumable_apply(
             ]
             if not remaining:
                 break
+            if len(remaining) < last_remaining:
+                deadline = None
+            last_remaining = len(remaining)
             claimed_any = False
             for b in remaining:
                 if fail_after is not None and processed >= fail_after:
@@ -326,7 +330,6 @@ def resumable_apply(
                 _process(b)
                 processed += 1
             if claimed_any:
-                deadline = None  # progress was made; reset the wait budget
                 continue
             if deadline is None:
                 deadline = time.time() + sibling_wait_s

@@ -56,7 +56,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Engine-default session: AQE + skew join + Arrow on, sane batch size."""
+    """Engine-default session: AQE + skew join + Arrow on, sane batch size,
+    ERROR-level logging, package attached for pandas-UDF workers."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = (
         SparkSession.builder.master(master or f"local[{cpus}]")
@@ -72,5 +73,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     attach_package(spark)
     return spark

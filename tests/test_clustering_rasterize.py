@@ -301,3 +301,25 @@ def test_rle_tiles_roundtrip_through_stored_bytes(spark):
     assert r.phash == average_phash(dec, 4, 4)
     idx1 = np.arange(16, dtype=np.int64).reshape(4, 4) + 1
     assert r.checksum == int((idx1 * gray.astype(np.int64)).sum())
+
+
+@pytest.mark.parametrize("fmt", ["raw", "rle"])
+def test_tile_pixels_rejects_offsetting_corrupt_tiles(spark, fmt):
+    """Two corrupt 2x2 tiles in one batch, one 3 bytes short and one 3
+    bytes long: their total matches two good tiles, so only a per-tile
+    size check stops the second tile's pixels landing in the first."""
+    import pandas as pd
+    from pyspark.errors import PythonException
+
+    from geojson_spark.operators.rasterize import tile_pixels
+    from geojson_spark.sources.images import encode_image
+
+    short = np.full(9, 7, dtype=np.uint8)
+    long_ = np.full(15, 9, dtype=np.uint8)
+    tiles = spark.createDataFrame(pd.DataFrame({
+        "tile_id": [1, 2],
+        "bytes": [encode_image(short, fmt), encode_image(long_, fmt)],
+        "w": [2, 2], "h": [2, 2], "fmt": [fmt, fmt],
+    })).coalesce(1)
+    with pytest.raises(PythonException, match="ValueError"):
+        tile_pixels(tiles).collect()

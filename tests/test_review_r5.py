@@ -97,6 +97,47 @@ def test_resumable_apply_waits_for_sibling_commit(spark, tmp_path):
         t.join()
 
 
+def test_resumable_apply_waits_for_steadily_committing_sibling(spark, tmp_path):
+    """A live sibling that commits one bucket every 0.6 x sibling_wait_s
+    never stalls for the whole budget, though its commits take longer
+    than one budget in total: the wait must restart at each commit and
+    the result must be the complete union, not a TimeoutError."""
+    from geojson_spark.plans.checkpoint import CheckpointTable, resumable_apply
+
+    ckpt = CheckpointTable(str(tmp_path / "c"))
+    df = _mk_input(spark)
+    n_buckets, wait_s = 5, 2.0
+    staged = {}
+    for b in range(n_buckets):
+        part = df.withColumn(
+            "_b", F.pmod(F.xxhash64(F.col("k")), F.lit(n_buckets))
+        ).where(F.col("_b") == b).drop("_b")
+        staged[b] = (str(tmp_path / f"sibling_{b}"), part.count())
+        part.write.mode("overwrite").parquet(staged[b][0])
+        assert ckpt.claim_bucket(b, stage="s", owner="sibling")
+
+    def sibling_commits():
+        for b, (path, rows) in staged.items():
+            time.sleep(0.6 * wait_s)
+            os.replace(path, ckpt.bucket_data_path(b))
+            ckpt.commit_bucket(
+                b, {"stage": "s", "bucket": b, "rows_out": rows},
+                meta={"stage": "s", "n_buckets": n_buckets},
+            )
+
+    t = threading.Thread(target=sibling_commits)
+    t.start()
+    try:
+        out = resumable_apply(
+            spark, df, lambda part: part, ckpt,
+            stage="s", bucket_col="k", n_buckets=n_buckets, sibling_wait_s=wait_s,
+        )
+        assert sorted(r.k for r in out.collect()) == list(range(40))
+    finally:
+        t.join(timeout=30)
+    assert not t.is_alive()
+
+
 def test_resumable_apply_reclaims_dead_siblings_bucket(spark, tmp_path):
     """A claim whose owner pid is gone is crashed state — the resume must
     reclaim and process that bucket itself, still returning full output."""
@@ -313,21 +354,21 @@ def test_quiet_host_gate_meets_and_times_out(monkeypatch):
     reading) when it cannot — it may delay a measurement, never block it."""
     import bench
 
-    monkeypatch.setenv("SPARK_GRAFT_HEALTHY_PROBE_S", "999")
+    monkeypatch.setattr(bench, "HEALTHY_PROBE_S", 999)
     out = bench._wait_for_quiet_host(5.0)
     assert out["met"] and out["waited_s"] == 0.0 and out["probe"] > 0
 
-    monkeypatch.setenv("SPARK_GRAFT_HEALTHY_PROBE_S", "0.000001")
+    monkeypatch.setattr(bench, "HEALTHY_PROBE_S", 0.000001)
     out = bench._wait_for_quiet_host(0.2)
     assert not out["met"] and out["probe"] > 0
 
     # ceiling_pair: a generous ceiling requirement passes, an impossible
     # (>1) one forces the timeout path even with a healthy probe
-    monkeypatch.setenv("SPARK_GRAFT_HEALTHY_PROBE_S", "999")
-    monkeypatch.setenv("SPARK_GRAFT_GATE_CEILING", "0.0")
+    monkeypatch.setattr(bench, "HEALTHY_PROBE_S", 999)
+    monkeypatch.setattr(bench, "GATE_CEILING", 0.0)
     out = bench._wait_for_quiet_host(10.0, ceiling_pair=(1, 2))
     assert out["met"] and out["ceiling"] is not None
 
-    monkeypatch.setenv("SPARK_GRAFT_GATE_CEILING", "9.9")
+    monkeypatch.setattr(bench, "GATE_CEILING", 9.9)
     out = bench._wait_for_quiet_host(0.2, ceiling_pair=(1, 2))
     assert not out["met"]

